@@ -1,0 +1,9 @@
+package org.apache.spark
+
+/** Access to the listener bus's drain, which Spark keeps package-private:
+  * the benchmark reads its engine counters only after every event of the
+  * measured work has been delivered.
+  */
+object PerfbenchBus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
